@@ -54,6 +54,12 @@ def run_pipeline(
     ``profile=True`` materializes the parse cache as its own action so
     ``phase_sec`` attributes parse separately from the write (same total
     work — the write then reads the cache — but one extra cache pass).
+
+    A run's quarantine rows (``status``, ``raw`` of every line that failed
+    to parse) are held on the driver, as its lineage rows are: they ride
+    the parse observation out of the one parse pass and are committed
+    driver-side. A quarantine too large for driver memory has no spill
+    path.
     """
     t0 = time.time()
     phases: dict[str, float] = {}
@@ -61,18 +67,22 @@ def run_pipeline(
     already_done = manifest.load() if resume else set()
 
     # ONE physical parse pass, ZERO extra materializations: the quarantine
-    # count and the parse-latency percentiles ride the write action as an
+    # rows and the parse-latency percentiles ride the write action as an
     # `observe()` (CollectMetrics) node on the parsed stream — no persist of
-    # the parsed relation. An earlier design cached parsed (7M+ rows of
-    # token arrays) just to serve those two scalars; on a shared memory bus
-    # that cache write was a second copy of the whole fact table, and at
-    # 10^12 rows it would be a second copy of the corpus. The quarantine
-    # ROWS (not just the count) are re-derived by a second parse only when
-    # the observed count is nonzero — the cold repair path, never the hot one.
+    # the parsed relation and no second parse. An earlier design cached
+    # parsed (7M+ rows of token arrays) just to serve those outputs; on a
+    # shared memory bus that cache write was a second copy of the whole fact
+    # table, and at 10^12 rows it would be a second copy of the corpus. The
+    # quarantine is the rare lane, so its (status, raw) pairs are collected
+    # into the observation itself — OK rows contribute a NULL that
+    # collect_list skips.
     parsed = parse_raw(raw_df, with_metrics=with_metrics)
+    quarantine_schema = parsed.select("status", "raw").schema
     obs = Observation("parse_metrics")
     obs_exprs = [
-        F.sum((F.col("status") != "OK").cast("long")).alias("n_quarantine"),
+        F.collect_list(
+            F.when(F.col("status") != "OK", F.struct("status", "raw"))
+        ).alias("quarantine"),
     ]
     if with_metrics:
         obs_exprs.append(
@@ -110,9 +120,12 @@ def run_pipeline(
     # by construction: concat_ws renders a NULL sign as the empty string, so
     # non-empty field 10 ⇔ sign IS NOT NULL, and corrupt/resumed/ignored
     # rows fall out of the sliver exactly as they fall out of `kept`.
+    # The sliver holds only the rare sign rows, so it is parsed in ONE
+    # Python task (each Python task has a fixed worker-side start cost);
+    # the shuffle sits after the filter, so the raw scan stays parallel.
     sign_sliver = raw_df.filter(
         F.split_part(F.col("raw"), F.lit("|"), F.lit(10)) != F.lit("")
-    )
+    ).repartition(1)
     sliver_good, _ = split_quarantine(parse_raw(sign_sliver, with_metrics=False))
     sliver_good = sliver_good.withColumn(
         "table_key",
@@ -195,20 +208,6 @@ def run_pipeline(
         rollup_base.count()
         phases["rollup"] = round(time.time() - t, 3)
 
-        # the four aggregate outputs are tiny (per-sink cardinality, one file
-        # each) but each publish is its own Spark job whose submit + commit
-        # tail is serial; at higher core counts those fixed tails dominate the
-        # wall clock (they don't parallelize), so publish CONCURRENTLY —
-        # Spark's scheduler handles multi-threaded job submission natively
-        from concurrent.futures import ThreadPoolExecutor
-
-        def _publish_lineage():
-            # lineage is one row per file×sink: collect once, reuse for the
-            # manifest and the routed-row metric without further scans
-            rows = lineage.collect()
-            tables["lineage"].write(spark.createDataFrame(rows, lineage.schema))
-            return rows
-
         # observed during the routed write — no extra pass over parsed
         try:
             observed = obs.get
@@ -216,39 +215,56 @@ def run_pipeline(
             # AQE's runtime empty-relation propagation can replace the whole
             # map subtree (including the CollectMetrics node) with an empty
             # LocalTableScan when the write increment turns out empty — e.g.
-            # a fully-resumed rerun — and the observation then surfaces as a
-            # schema-less row that fails to deserialize. Recompute the two
-            # scalars with an explicit aggregate; this rare path re-parses,
-            # but only on runs that wrote nothing.
+            # a fully-resumed rerun or an all-corrupt increment — and the
+            # observation then surfaces as a schema-less row that fails to
+            # deserialize. Recompute it with an explicit aggregate; this rare
+            # path re-parses, but only on runs that wrote nothing.
             row = parse_raw(raw_df, with_metrics=with_metrics).agg(
                 *obs_exprs
             ).collect()[0]
             observed = row.asDict()
-        n_quarantine = int(observed["n_quarantine"] or 0)
+        quarantine_rows = [tuple(r) for r in observed["quarantine"] or []]
+        n_quarantine = len(quarantine_rows)
         lat = observed.get("lat_pcts") if with_metrics else None
         lat_p50, lat_p95, lat_p99 = lat if lat else (None, None, None)
 
+        # the four aggregate outputs are tiny (per-sink cardinality), so
+        # each is collected as Arrow and committed driver-side
+        # (SnapshotTable.write_small): one collect job instead of a Spark
+        # write job with its planning and committer tail. The collects are
+        # submitted CONCURRENTLY — their fixed submit costs don't
+        # parallelize inside one job — and Spark's scheduler handles
+        # multi-threaded job submission natively.
+        from concurrent.futures import ThreadPoolExecutor
+
+        def _publish(name: str, df: DataFrame):
+            data = df.toArrow()
+            tables[name].write_small(spark, data, df.schema)
+            return data
+
         t = time.time()
-        with ThreadPoolExecutor(max_workers=6) as ex:
-            f_lineage = ex.submit(_publish_lineage)
-            f_pub = [
-                ex.submit(tables["sink_counts"].write, sink_counts.coalesce(1)),
-                ex.submit(tables["watermarks"].write, wm.coalesce(1)),
-                ex.submit(tables["histograms"].write, hist.coalesce(1)),
-            ]
-            lineage_rows = f_lineage.result()
-            for f in f_pub:
+        with ThreadPoolExecutor(max_workers=5) as ex:
+            f_pub = {
+                name: ex.submit(_publish, name, df)
+                for name, df in (
+                    ("sink_counts", sink_counts),
+                    ("watermarks", wm),
+                    ("histograms", hist),
+                    ("lineage", lineage),
+                )
+            }
+            if n_quarantine:
+                f_pub["quarantine"] = ex.submit(
+                    tables["quarantine"].write_small,
+                    spark, quarantine_rows, quarantine_schema,
+                )
+            # lineage is one row per file×sink: collected once, reused for
+            # the manifest, the routed-row metric and the run report
+            lineage_rows = f_pub["lineage"].result().to_pylist()
+            for f in f_pub.values():
                 f.result()
         rollup_base.unpersist()
         phases["publish"] = round(time.time() - t, 3)
-
-        if n_quarantine:
-            # cold path: re-parse to recover the quarantine ROWS (the hot
-            # path only ever needs the count, which the observation carried)
-            _, bad_rows = split_quarantine(
-                parse_raw(raw_df, with_metrics=False)
-            )
-            tables["quarantine"].write(bad_rows)
 
         # one atomic catalog version pins every table this run committed:
         # a reader between the routed commit and a rollup commit sees the
@@ -267,10 +283,12 @@ def run_pipeline(
 
         # lineage spans the whole committed table; metrics report THIS run's
         # increment (the reference's per-run t_binlog_process_log semantics)
-        files_done = sorted({r.file_id for r in lineage_rows})
+        files_done = sorted({r["file_id"] for r in lineage_rows})
         new_files = [f for f in files_done if f not in already_done]
         n_routed = sum(
-            r.routed_cnt for r in lineage_rows if r.file_id not in already_done
+            r["routed_cnt"]
+            for r in lineage_rows
+            if r["file_id"] not in already_done
         )
         manifest.mark(files_done)
 
@@ -307,21 +325,12 @@ def run_pipeline(
         rpt_tbl = SnapshotTable(os.path.join(out_dir, "process_report"))
         from pyspark.sql.types import _parse_datatype_string
 
-        try:
-            # driver-side single-file commit: no Spark job for 20 rows
-            rpt_tbl.write_rows(
-                rpt_rows,
-                _parse_datatype_string(REPORT_SCHEMA_DDL),
-                mode="append",
-            )
-        except ValueError:
-            # URI-rooted warehouse: fall back to the Spark write path
-            rpt_tbl.write(
-                spark.createDataFrame(
-                    rpt_rows, schema=REPORT_SCHEMA_DDL
-                ).coalesce(1),
-                mode="append",
-            )
+        rpt_tbl.write_small(
+            spark,
+            rpt_rows,
+            _parse_datatype_string(REPORT_SCHEMA_DDL),
+            mode="append",
+        )
         tables["process_report"] = rpt_tbl
         return PipelineResult(metrics=metrics, tables=tables)
     finally:

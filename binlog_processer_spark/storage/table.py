@@ -38,12 +38,16 @@ import hashlib
 import json
 import os
 import time
+from typing import TYPE_CHECKING
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, DataType, MapType, StructType
 
 from . import fs as fsmod
+
+if TYPE_CHECKING:
+    import pyarrow as pa
 
 
 def _bloom_bits_from_keys(
@@ -858,22 +862,41 @@ class SnapshotTable:
         self._commit(snap, expected_parent=parent)
         return snap
 
+    def write_small(
+        self,
+        spark: SparkSession,
+        rows: pa.Table | list[tuple],
+        schema: StructType,
+        mode: str = "overwrite",
+    ) -> int:
+        """Commit a METADATA-SCALE relation already held on the driver:
+        ``write_rows`` (no Spark job) on a local root, one single-file
+        Spark write on a URI root, where pyarrow has no filesystem."""
+        if not fsmod.is_uri(self.root):
+            return self.write_rows(rows, schema, mode=mode)
+        return self.write(
+            spark.createDataFrame(rows, schema).coalesce(1), mode=mode
+        )
+
     def write_rows(
         self,
-        rows: list[tuple],
+        rows: pa.Table | list[tuple],
         schema: StructType,
         mode: str = "overwrite",
         properties: dict | None = None,
     ) -> int:
         """Driver-side single-file commit for METADATA-SCALE tables (run
-        reports, tiny manifests): one pyarrow parquet write + the same
-        snapshot/manifest/commit path as ``write()``, bypassing the
-        Spark job a 20-row relation would otherwise pay (~2 s of
-        planning + committer overhead per call — measured on the
-        process_report write). Parquet only, unpartitioned, no
-        stats/blooms; URI-rooted tables fall back to the Spark path via
-        the caller (pyarrow writes need a local filesystem). Appends
-        enforce the same shape-compatible-schema contract as
+        reports, pipeline rollups, quarantine rows): one pyarrow parquet
+        write + the same snapshot/manifest/commit path as ``write()``,
+        bypassing the Spark job a 20-row relation would otherwise pay
+        (~2 s of planning + committer overhead per call — measured on the
+        process_report write). ``rows`` is an Arrow table (e.g.
+        ``DataFrame.toArrow()``, columns matched by name) or tuples in
+        ``schema`` order. The file carries the types Spark writes:
+        timestamps as UTC-adjusted micros (naive datetimes are UTC wall
+        times), dates as date32. Parquet only, unpartitioned, no
+        stats/blooms; URI-rooted tables go through ``write_small``.
+        Appends enforce the same shape-compatible-schema contract as
         ``write()``."""
         if fsmod.is_uri(self.root):
             raise ValueError(
@@ -900,26 +923,36 @@ class SnapshotTable:
         snap, snap_dir = self._reserve_snapshot()
         data_dir = fsmod.join(snap_dir, "data")
         self._fs.mkdirs(data_dir)
-        # Spark-parquet-compatible arrow table: timestamps as us (what
-        # Spark's vectorized reader expects), ints as int64/int32
+        # the physical types Spark's own parquet write produces:
+        # TimestampType is an instant (isAdjustedToUTC=true micros — a naive
+        # pa.timestamp would land as TIMESTAMP_NTZ), ints as int64/int32
         _PA = {
             "string": pa.string(), "bigint": pa.int64(), "int": pa.int32(),
             "double": pa.float64(), "boolean": pa.bool_(),
-            "timestamp": pa.timestamp("us"),
+            "timestamp": pa.timestamp("us", tz="UTC"), "date": pa.date32(),
         }
-        cols = {}
-        for i, f in enumerate(schema.fields):
+        fields = []
+        for f in schema.fields:
             t = _PA.get(f.dataType.simpleString())
             if t is None:
                 raise ValueError(
                     f"write_rows: unsupported dtype {f.dataType.simpleString()}"
                     " (use write() for complex schemas)"
                 )
-            cols[f.name] = pa.array([r[i] for r in rows], type=t)
+            fields.append(pa.field(f.name, t, nullable=f.nullable))
+        target = pa.schema(fields)
+        if isinstance(rows, pa.Table):
+            tbl = rows.select(target.names).cast(target)
+        else:
+            tbl = pa.table(
+                [
+                    pa.array([r[i] for r in rows], type=f.type)
+                    for i, f in enumerate(target)
+                ],
+                schema=target,
+            )
         fname = "part-00000-driver.parquet"
-        pq.write_table(
-            pa.table(cols), os.path.join(data_dir, fname)
-        )
+        pq.write_table(tbl, os.path.join(data_dir, fname))
         sizes = self._sizes_rel(data_dir, ".parquet")
         files = sorted(sizes)
         data_dirs = [fsmod.rel_to(data_dir, self.root)]

@@ -2,17 +2,67 @@
 write → aggregates, with resume/no-duplicate semantics (SURVEY.md §3.1
 restatement + §5 golden test)."""
 
+from collections import Counter
+
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
-from binlog_processer_spark.functions.parse import serialize_expr
+from binlog_processer_spark.functions.parse import (
+    corrupt_expr,
+    parse_raw,
+    serialize_expr,
+    split_quarantine,
+)
+from binlog_processer_spark.operators.aggregate import single_pass_rollups
+from binlog_processer_spark.plans import pipeline as pipeline_mod
 from binlog_processer_spark.plans.pipeline import run_pipeline
 from binlog_processer_spark.sources.generator import generate_corpus, routing_dim
+from binlog_processer_spark.storage.table import SnapshotTable
 
 
 def _raw(spark, n_docs=200):
     return generate_corpus(spark, n_docs, partitions=4).select(
         serialize_expr().alias("raw")
     )
+
+
+def _corrupt_raw(spark, n_docs=400):
+    """Wire lines with ``corrupt_expr``'s deterministic ~0.5% truncation."""
+    return generate_corpus(spark, n_docs, partitions=4).select(
+        corrupt_expr(serialize_expr(), F.col("doc_num"), F.col("r")).alias("raw")
+    )
+
+
+def _expected_quarantine(spark, n_docs=400) -> Counter:
+    """The lines ``corrupt_expr`` truncates, derived from the generator's
+    own predicate — not from the parser under test."""
+    ev = generate_corpus(spark, n_docs, partitions=4)
+    bad = ev.filter((F.col("doc_num") * 5 + F.col("r")) % 211 == 7)
+    return Counter(
+        ("PARSE_ERROR", r.raw)
+        for r in bad.select(F.substring(serialize_expr(), 1, 10).alias("raw"))
+        .collect()
+    )
+
+
+def _quarantine(spark, res) -> Counter:
+    return Counter(
+        tuple(r) for r in res.tables["quarantine"].read(spark).collect()
+    )
+
+
+def _spy_parse(monkeypatch) -> list:
+    """Record every DataFrame run_pipeline hands to parse_raw."""
+    calls = []
+    real = pipeline_mod.parse_raw
+
+    def spy(df, *args, **kwargs):
+        calls.append(df)
+        return real(df, *args, **kwargs)
+
+    monkeypatch.setattr(pipeline_mod, "parse_raw", spy)
+    return calls
 
 
 def test_pipeline_end_to_end(spark, tmp_path):
@@ -158,3 +208,83 @@ def test_pipeline_publishes_process_report(spark, tmp_path):
         for r in rep2.filter(F.col("run_ts") == latest_ts).collect()
     }
     assert latest["rows_routed"] == 0 and latest["files_processed"] == 0
+
+
+def test_quarantine_rows_ride_the_first_parse_pass(
+    spark, tmp_path, monkeypatch
+):
+    """Corrupt lines are committed as the quarantine table straight from
+    the parse observation: the table equals exactly the truncated lines,
+    rows_failed counts them, and the full input is parsed ONCE (the sign
+    sliver is a separate, filtered input)."""
+    raw = _corrupt_raw(spark)
+    expected = _expected_quarantine(spark)
+    assert expected  # the fixture does contain corrupt lines
+    calls = _spy_parse(monkeypatch)
+    res = run_pipeline(spark, raw, routing_dim(spark), str(tmp_path / "out"))
+    assert _quarantine(spark, res) == expected
+    assert res.metrics["rows_failed"] == sum(expected.values())
+    assert sum(df is raw for df in calls) == 1
+
+
+def test_all_corrupt_increment_quarantines_via_observation_fallback(
+    spark, tmp_path, monkeypatch
+):
+    """An increment whose every line is corrupt routes nothing: its write is
+    empty, AQE drops the observation, and the fallback aggregate (the only
+    other parse of the full input) must still carry the quarantine rows."""
+    out = str(tmp_path / "out")
+    run_pipeline(spark, _raw(spark, 100), routing_dim(spark), out)
+    ev = generate_corpus(spark, 40, partitions=2)
+    raw = ev.select(F.substring(serialize_expr(), 1, 10).alias("raw"))
+    expected = Counter(("PARSE_ERROR", r.raw) for r in raw.collect())
+    calls = _spy_parse(monkeypatch)
+    res = run_pipeline(spark, raw, routing_dim(spark), out)
+    assert res.metrics["rows_routed"] == 0
+    assert _quarantine(spark, res) == expected
+    assert res.metrics["rows_failed"] == sum(expected.values())
+    assert sum(df is raw for df in calls) == 2
+
+
+def test_fully_resumed_rerun_keeps_quarantine(spark, tmp_path):
+    """A rerun over already-processed files writes an empty increment; the
+    quarantine it commits still equals the input's corrupt lines."""
+    out = str(tmp_path / "out")
+    expected = _expected_quarantine(spark)
+    run_pipeline(spark, _corrupt_raw(spark), routing_dim(spark), out)
+    res = run_pipeline(spark, _corrupt_raw(spark), routing_dim(spark), out)
+    assert res.metrics["files_processed"] == 0
+    assert _quarantine(spark, res) == expected
+    assert res.metrics["rows_failed"] == sum(expected.values())
+
+
+def test_driver_committed_tables_match_spark_written(spark, tmp_path):
+    """The five tables run_pipeline commits driver-side read back equal to
+    the same relations written by a Spark job — same rows, same manifest
+    schema, same parquet schema in the data files."""
+    raw = _corrupt_raw(spark)
+    res = run_pipeline(spark, raw, routing_dim(spark), str(tmp_path / "out"))
+    sink_counts, wm, hist, lineage, base = single_pass_rollups(
+        res.tables["routed"].read(spark)
+    )
+    _, bad = split_quarantine(parse_raw(raw))
+    for name, df in (
+        ("sink_counts", sink_counts),
+        ("watermarks", wm),
+        ("histograms", hist),
+        ("lineage", lineage),
+        ("quarantine", bad),
+    ):
+        ref = SnapshotTable(str(tmp_path / "spark" / name))
+        ref.write(df.coalesce(1))
+        got, want = res.tables[name].read(spark), ref.read(spark)
+        assert got.schema == want.schema, name
+        assert Counter(map(tuple, got.collect())) == Counter(
+            map(tuple, want.collect())
+        ), name
+        got_file = pq.read_schema(res.tables[name].data_files()[0])
+        want_file = pq.read_schema(ref.data_files()[0])
+        assert got_file.equals(want_file, check_metadata=False), name
+    base.unpersist()
+    report = pq.read_schema(res.tables["process_report"].data_files()[0])
+    assert report.field("run_ts").type == pa.timestamp("us", tz="UTC")

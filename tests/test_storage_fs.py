@@ -184,3 +184,19 @@ def test_commit_lock_refuses_ttl_break_on_copy_delete_rename(tmp_path):
     with fsmod.commit_lock(f, lock):
         assert os.path.exists(lock)
     assert not os.path.exists(lock)
+
+
+def test_write_small_over_file_uri_takes_spark_write(spark, tmp_path):
+    """write_small commits driver-held Arrow rows on a URI root through the
+    Spark write (pyarrow has no Hadoop filesystem) and reads back equal."""
+    from pyspark.sql.types import _parse_datatype_string
+
+    schema = _parse_datatype_string("k string, n bigint, d date")
+    df = spark.createDataFrame(
+        [("a", 1, None), ("b", None, None)], schema
+    ).withColumn("d", F.to_date(F.lit("2024-01-05")))
+    t = SnapshotTable(f"file://{tmp_path}/uri_small")
+    t.write_small(spark, df.toArrow(), df.schema)
+    assert sorted(map(tuple, t.read(spark).collect())) == sorted(
+        map(tuple, df.collect())
+    )
